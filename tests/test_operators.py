@@ -66,6 +66,61 @@ class TestGates:
         assert good == [dt.date(2026, 8, 1)]
 
 
+class TestChartGates:
+    """``daily_extremes`` computes FLT-2 and AGG-4 from one aggregate per
+    ``haa_ts`` and emits the lon=360 seam with a generator; these pin
+    that the result keeps the two-pass gates' semantics."""
+
+    @staticmethod
+    def _grid(spark, rows):
+        # lons 0, 1, 2 all have hour angle 0, so haa_ts == ts
+        return spark.createDataFrame(rows, "lat double, lon double, ts timestamp, utci double")
+
+    @staticmethod
+    def _daily(df, min_hours=24):
+        from w4h_etl_container_spark.pipeline import charts as charts_mod
+
+        out = charts_mod.daily_extremes(charts_mod.cyclic_point_union(df), min_hours=min_hours)
+        return {(r["lon"], r["haa_date"]): (r["high"], r["low"]) for r in out.collect()}
+
+    def test_null_cell_drops_timestep_for_every_cell(self, spark):
+        rows = []
+        for h in range(24):
+            rows.append((10.0, 1.0, ts(h), None if h == 5 else 1.0))
+            rows.append((10.0, 2.0, ts(h), 99.0 if h == 5 else 2.0))
+        got = self._daily(self._grid(spark, rows), min_hours=23)
+        # hour 5 is gone for lon 2 as well: its 99 never reaches the high
+        assert got == {(1.0, dt.date(2026, 8, 1)): (1.0, 1.0), (2.0, dt.date(2026, 8, 1)): (2.0, 2.0)}
+
+    def test_date_with_23_clean_hours_dropped(self, spark):
+        rows = []
+        for h in range(24):
+            rows.append((10.0, 1.0, ts(h), float(h)))
+            rows.append((10.0, 1.0, dt.datetime(2026, 8, 2, h), None if h == 7 else float(h)))
+        got = self._daily(self._grid(spark, rows))
+        assert got == {(1.0, dt.date(2026, 8, 1)): (23.0, 0.0)}
+
+    def test_seam_row_carries_lon0_extremes(self, spark):
+        rows = [(10.0, lon, ts(h), lon * 10 + h) for h in range(24) for lon in (0.0, 1.0)]
+        got = self._daily(self._grid(spark, rows))
+        d = dt.date(2026, 8, 1)
+        assert got[(360.0, d)] == got[(0.0, d)] == (23.0, 0.0)
+        assert got[(1.0, d)] == (33.0, 10.0)
+        assert len(got) == 3
+
+    def test_daily_plan_reads_input_twice(self, spark, tmp_path):
+        """Over a parquet leaf, the gates and the extremes share one
+        branch: the optimized plan has exactly 2 relation leaves."""
+        from w4h_etl_container_spark.pipeline import charts as charts_mod
+
+        path = str(tmp_path / "grid.parquet")
+        self._grid(spark, [(10.0, 0.0, ts(0), 1.0)]).write.parquet(path)
+        daily = charts_mod.daily_extremes(charts_mod.cyclic_point_union(spark.read.parquet(path)))
+        leaves = daily._jdf.queryExecution().optimizedPlan().collectLeaves()
+        names = [leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())]
+        assert names == ["LogicalRelation", "LogicalRelation"]
+
+
 class TestHourAngleShift:
     def test_wraparound(self, spark):
         df = spark.createDataFrame(
@@ -159,6 +214,59 @@ class TestAlerts:
         assert got and "load died" in got[0]
         assert StateStore(f"{work}/status.json").try_lock()  # lock released
         alerts.clear_sinks()
+
+    @pytest.fixture(scope="class")
+    def clean_cycle(self, spark, grid_dir, tmp_path_factory):
+        from w4h_etl_container_spark.pipeline.job import run_job
+
+        return run_job(spark, grid_dir, str(tmp_path_factory.mktemp("clean") / "work"))
+
+    @pytest.mark.parametrize(
+        "target",
+        ["serve.run_serve", "forecast.write_snapshot"],
+        ids=["serve", "snapshot"],
+    )
+    def test_failed_cycle_leaves_no_commit_or_cache(
+        self, spark, grid_dir, tmp_path, monkeypatch, clean_cycle, target
+    ):
+        """A cycle that fails in serve or in the snapshot write releases
+        the lock, commits no source, leaves no cached relation in the
+        session, and the next cycle reruns it to the same result."""
+        from w4h_etl_container_spark.pipeline import alerts
+        from w4h_etl_container_spark.pipeline.job import run_job
+        from w4h_etl_container_spark.pipeline.state import StateStore
+
+        spark.catalog.clearCache()
+        alerts.clear_sinks()
+
+        def boom(*a, **k):
+            raise RuntimeError(f"{target} died")
+
+        work = str(tmp_path / "work")
+        with monkeypatch.context() as m:
+            m.setattr(f"w4h_etl_container_spark.pipeline.{target}", boom)
+            with pytest.raises(RuntimeError, match=f"{target} died"):
+                run_job(spark, grid_dir, work)
+        state = StateStore(f"{work}/status.json")
+        assert state.read()["isUpdating"] is False  # lock released
+        assert state.latest_source() is None
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        rerun = run_job(spark, grid_dir, work)
+        assert rerun == clean_cycle and rerun["n_docs"] > 0
+
+
+class TestLocalDf:
+    def test_nan_map_value_refused(self, spark):
+        """Arrow's pandas conversion turns a NaN map value into NULL, so a
+        NaN anywhere in a map refuses the LocalRelation."""
+        from pyspark.sql import types as T
+
+        from w4h_etl_container_spark.operators.localrel import local_df
+
+        schema = T.StructType([T.StructField("m", T.MapType(T.StringType(), T.DoubleType()))])
+        ok = local_df(spark, [({"a": 1.5},)], schema)
+        assert ok is not None and ok.collect()[0]["m"] == {"a": 1.5}
+        assert local_df(spark, [({"a": float("nan")},)], schema) is None
 
 
 class TestGroupedMap:

@@ -55,6 +55,8 @@ def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame | Non
             return v != v
         if isinstance(v, (list, tuple)):
             return any(_has_nan(x) for x in v)
+        if isinstance(v, dict):  # map columns collect as dicts
+            return any(_has_nan(k) or _has_nan(x) for k, x in v.items())
         return False
 
     try:

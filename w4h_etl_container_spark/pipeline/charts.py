@@ -1,5 +1,5 @@
 """Entry point 3 — charting (reference ``main.py:341-443``; SURVEY §3
-lifecycle 3): cyclic-point union → HAA key-shift → completeness gates →
+lifecycle 3): cyclic-point seam → HAA key-shift → completeness gates →
 daily high/low grids → driver-side render.
 
 Everything up to the render is one distributed plan; only the final
@@ -17,32 +17,57 @@ import os
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from w4h_etl_container_spark.operators.gates import drop_incomplete_timesteps, qualifying_periods
 from w4h_etl_container_spark.operators.shift import hour_angle_shift
 
 
 def cyclic_point_union(df: DataFrame, lon_col: str = "lon") -> DataFrame:
-    """SET-2 (reference ``main.py:345-350``): if lon 0 is present, append
-    a copy relabeled lon=360 so contour charts wrap. Plan-level union of a
-    one-column slice — negligible at any scale."""
-    seam = df.where(F.col(lon_col) == 0.0).withColumn(lon_col, F.lit(360.0))
-    return df.unionByName(seam)
+    """SET-2 (reference ``main.py:345-350``): every lon 0 row is emitted
+    twice, as itself and relabeled lon=360, so contour charts wrap.
+
+    The seam is a generator (``explode`` of ``[lon, 360]`` on lon 0 rows,
+    ``[lon]`` elsewhere), not a Union with a filtered copy: a Union puts
+    two branches over the input, and Catalyst pushes every later
+    semi-join and aggregate into both, which doubles the scans and
+    shuffles of the chart plan. The generator keeps one branch and the
+    same rows."""
+    lon = F.col(lon_col)
+    seam = F.when(lon == 0.0, F.array(lon, F.lit(360.0))).otherwise(F.array(lon))
+    return df.withColumn(lon_col, F.explode(seam))
 
 
 def daily_extremes(df: DataFrame, value_col: str = "utci", min_hours: int = 24) -> DataFrame:
     """WIN-1 → FLT-2 → AGG-4 → AGG-1 (reference ``main.py:361-408``):
     local-solar-time relabeling, drop any timestep with a null anywhere,
     keep dates with ≥ ``min_hours`` distinct hours, then per-cell daily
-    max/min."""
+    max/min.
+
+    Both gates come from ONE aggregate per ``haa_ts``: its null flag is
+    FLT-2 (``operators.gates.drop_incomplete_timesteps``), and since a
+    row's hour and date are functions of its ``haa_ts`` alone, the
+    distinct hours of a date's clean rows are the distinct hours of its
+    clean timesteps, so AGG-4 (``operators.gates.qualifying_periods``)
+    is a window over that small table. The surviving timesteps are
+    broadcast as one semi-join, so the plan reads its input twice: once
+    for the gate aggregate, once for the daily extremes."""
     shifted = hour_angle_shift(df)
-    shifted = shifted.withColumn("haa_date", F.to_date("haa_ts"))
-    clean = drop_incomplete_timesteps(shifted, "haa_ts", [value_col])
-    good_dates = qualifying_periods(clean, F.col("haa_date"), "haa_ts", min_hours)
-    gated = clean.join(F.broadcast(good_dates), "haa_date", "left_semi")
-    return gated.groupBy("lat", "lon", "haa_date").agg(
+    timesteps = (
+        shifted.groupBy("haa_ts")
+        .agg(F.max(F.col(value_col).isNull().cast("int")).alias("has_null"))
+        .where(F.col("has_null") == 0)
+    )
+    n_hours = F.size(
+        F.collect_set(F.date_trunc("HOUR", F.col("haa_ts"))).over(
+            Window.partitionBy(F.to_date("haa_ts"))
+        )
+    )
+    good = timesteps.select("haa_ts", n_hours.alias("n_hours")).where(
+        F.col("n_hours") >= min_hours
+    )
+    gated = shifted.join(F.broadcast(good), "haa_ts", "left_semi")
+    return gated.groupBy("lat", "lon", F.to_date("haa_ts").alias("haa_date")).agg(
         F.max(value_col).alias("high"),
         F.min(value_col).alias("low"),
     )

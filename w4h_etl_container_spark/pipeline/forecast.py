@@ -97,7 +97,12 @@ def run_forecast(
 def write_snapshot(df: DataFrame, path: str) -> None:
     """SNK-2 (reference ``to_netcdf`` + GCS upload, ``main.py:331-336``):
     the snapshot is a parquet table partitioned by run date — at 100 TB
-    the partitioning is what makes the next cycle's FLT-3 clip free."""
+    the partitioning is what makes the next cycle's FLT-3 clip free.
+
+    It is also the job's one materialization of the forecast: ``run_job``
+    writes it first, so the kernel chain executes once, in this write,
+    and serve and charts read the snapshot back (without ``snap_date``)
+    and plan over a columnar scan instead of the kernel tree."""
     df.withColumn("snap_date", F.to_date("ts")).write.mode("overwrite").partitionBy(
         "snap_date"
     ).parquet(path)

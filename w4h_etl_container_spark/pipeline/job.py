@@ -1,14 +1,21 @@
 """The full ETL job — the engine's rendering of the reference's ``main()``
 control flow (``main.py:30-453``): lock → discover latest source → skip if
-unchanged → forecast derive + merge → serving upsert → commit source →
-snapshot → charts → chart-registry upkeep → unlock.
+unchanged → forecast derive + merge, written as the snapshot → serving
+upsert over the snapshot → commit source → charts over the snapshot →
+chart-registry upkeep → unlock.
+
+The source is committed only once both the upsert and the snapshot are
+written, so a cycle that fails before then is retried by the next one
+instead of being skipped as "source unchanged". Nothing is cached in
+the session: serve and charts read the snapshot back, so a failed cycle
+leaves no cached relation behind.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from w4h_etl_container_spark.pipeline import alerts
@@ -46,13 +53,13 @@ def run_job(spark: SparkSession, grid_dir: str, work_dir: str) -> dict:
         if source == state.latest_source():  # STR-1 (main.py:64-66)
             return {"skipped": "source unchanged", "source": source}
 
-        merged = forecast_mod.run_forecast(spark, grid_dir)
-        merged = merged.cache()  # consumed by serve + snapshot + charts
+        # the kernel chain runs once, in the snapshot write
+        snapshot = os.path.join(work_dir, "snapshot")
+        forecast_mod.write_snapshot(forecast_mod.run_forecast(spark, grid_dir), snapshot)
+        merged = spark.read.parquet(snapshot).drop("snap_date")
 
         n_docs = serve_mod.run_serve(spark, merged, grid_dir, os.path.join(work_dir, "serving"))
-        state.commit_source(source)  # only after the upsert (main.py:326)
-
-        forecast_mod.write_snapshot(merged, os.path.join(work_dir, "snapshot"))
+        state.commit_source(source)  # only after the upsert (main.py:326) and the snapshot
 
         daily = charts_mod.daily_extremes(
             charts_mod.cyclic_point_union(merged.select("lat", "lon", "ts", "utci"))
@@ -63,7 +70,6 @@ def run_job(spark: SparkSession, grid_dir: str, work_dir: str) -> dict:
             state.register_chart(d, f"{d}_{source[-3:]}")
         if dates:
             state.expire_charts(min(dates))  # STR-4 (main.py:353-359)
-        merged.unpersist()
         return {"source": source, "n_docs": n_docs, "charts": len(artifacts), "dates": dates}
     except Exception as e:
         # the reference SMS-alerts then raises (utils.py:15-30,

@@ -219,10 +219,7 @@ def _plan_no_aqe(df: DataFrame) -> DataFrame:
 # LocalRelation helpers (r18): shared with operators/components.py —
 # the commit path and the driver union-find hand already-collected
 # bounded row sets back as true LocalRelations (see operators/localrel)
-from w4h_etl_container_spark.operators.localrel import (  # noqa: E402
-    is_local_rel as _is_local_rel,
-    local_df as _local_df,
-)
+from w4h_etl_container_spark.operators.localrel import local_df as _local_df  # noqa: E402
 
 
 def _persist_no_aqe(df: DataFrame) -> DataFrame:
